@@ -82,6 +82,23 @@ def test_incremental_empty_delta_is_identity(spark, snapshots):
     assert inc == vmap(prev)
 
 
+def test_incremental_applies_max_fail_ratio(spark, snapshots):
+    """A ratio-tolerant constraint composes to the same verdict as a
+    from-scratch run: passed when violations stay within
+    max_fail_ratio * evaluated, even though they are not zero."""
+    a, b = snapshots
+    d = dict(SPEC, constraints=[
+        {"kind": "length", "id": "t_len", "column": "text", "min": 5, "max": 100, "max_fail_ratio": 0.2},
+        {"kind": "not_null", "id": "t_nn", "column": "text", "max_fail_ratio": 0.01},
+    ])
+    spec = spec_from_dict(d)
+    prev = ValidationEngine(spark, spec).run(a).verdicts
+    inc = vmap(incremental_verdicts(spark, spec, a, b, prev))
+    assert inc == vmap(ValidationEngine(spark, spec).run(b).verdicts)
+    assert inc["t_len"][0] > 0 and inc["t_len"][1]  # tolerated
+    assert inc["t_nn"][0] > 0 and not inc["t_nn"][1]  # over its ratio
+
+
 def test_incremental_per_partition_spec(spark):
     """partition_by specs compose per (partition_key, constraint_id),
     including a partition that only exists in the new snapshot."""

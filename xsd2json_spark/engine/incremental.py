@@ -67,7 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from xsd2json_spark.engine.validate import VERDICT_COLUMNS, ValidationEngine
+from xsd2json_spark.engine.validate import VERDICT_COLUMNS, VERDICT_SCHEMA, ValidationEngine, _passed
 from xsd2json_spark.spec.constraints import Cardinality, Drift, ForeignKey, Spec, Unique
 
 
@@ -118,7 +118,8 @@ def incremental_row_verdicts(
     semantics: partitions that newly appear (only in added) or fully
     drain (evaluated_count reaching 0 — vacuous pass) both come out
     right because every count coalesces to 0."""
-    row_ids = [c.id for c in engine.spec.row_level()]
+    row_cs = engine.spec.row_level()
+    row_ids = [c.id for c in row_cs]
     va, _ = engine.row_verdicts_and_stats(added)
     vr, _ = engine.row_verdicts_and_stats(removed)
     prev = prev_verdicts.filter(F.col("constraint_id").isin(row_ids)).select(
@@ -138,12 +139,17 @@ def incremental_row_verdicts(
     on = ["partition_key", "constraint_id"]
     j = prev.join(a, on, "full").join(r, on, "full")
     z = lambda c: F.coalesce(F.col(c), F.lit(0))  # noqa: E731
+    # each constraint's max_fail_ratio, so the composed counts get the
+    # engine's own verdict rule
+    mfr = F.lit(None).cast("double")
+    for c in row_cs:
+        mfr = F.when(F.col("constraint_id") == c.id, F.lit(c.max_fail_ratio).cast("double")).otherwise(mfr)
     out = j.select(
         "partition_key",
         "constraint_id",
         (z("__pv") + z("__av") - z("__rv")).alias("violation_count"),
         (z("__pe") + z("__ae") - z("__re")).alias("evaluated_count"),
-    ).withColumn("passed", F.col("violation_count") == 0)
+    ).withColumn("passed", _passed(F.col("violation_count"), F.col("evaluated_count"), mfr))
     if engine.spec.partition_by:
         # a partition exists iff it has rows (evaluated_count is the
         # per-partition row count, identical across constraints): a
@@ -351,15 +357,6 @@ def compose_drift_counts(
     )
 
 
-def _bin_expr(v, grid) -> "F.Column":
-    """Canonical form lives in engine.drift.bin_index_expr (shared with
-    the streaming KS counter); kept as a thin alias for this module's
-    call sites."""
-    from xsd2json_spark.engine.drift import bin_index_expr
-
-    return bin_index_expr(v, grid)
-
-
 def drift_value_bins(df: DataFrame, c: Drift, baselines: dict) -> DataFrame:
     """The materialized KS drift state: one (__bin, n) row per occupied
     bin of the BASELINE's quantile grid (NULLs dropped). The grid has
@@ -373,13 +370,13 @@ def drift_value_bins(df: DataFrame, c: Drift, baselines: dict) -> DataFrame:
     baseline = baselines.get(c.baseline)
     if baseline is None:
         raise KeyError(f"drift {c.id}: baseline snapshot {c.baseline!r} not provided")
-    from xsd2json_spark.engine.drift import _value_col
+    from xsd2json_spark.engine.drift import _value_col, bin_index_expr
 
     v = _value_col(c).cast("double")
     return (
         df.select(v.alias("__v"))
         .na.drop()
-        .select(_bin_expr(F.col("__v"), baseline["grid"]).alias("__bin"))
+        .select(bin_index_expr("__v", baseline["grid"]).alias("__bin"))
         .groupBy("__bin")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -394,7 +391,7 @@ def compose_drift_bins(
     baseline = baselines.get(c.baseline)
     if baseline is None:
         raise KeyError(f"drift {c.id}: baseline snapshot {c.baseline!r} not provided")
-    from xsd2json_spark.engine.drift import _value_col
+    from xsd2json_spark.engine.drift import _value_col, bin_index_expr
 
     grid = baseline["grid"]
 
@@ -403,7 +400,7 @@ def compose_drift_bins(
         return (
             df.select(v.alias("__v"))
             .na.drop()
-            .select(_bin_expr(F.col("__v"), grid).alias("__bin"))
+            .select(bin_index_expr("__v", grid).alias("__bin"))
             .groupBy("__bin")
             .agg((F.count(F.lit(1)) * sign).alias("__d"))
         )
@@ -594,11 +591,7 @@ def incremental_verdicts(
                 rows = drift_verdict_rows_from_counts(c, counts, baselines or {})
             composed.append(c)
             verdicts = verdicts.unionByName(
-                spark.createDataFrame(
-                    rows,
-                    schema="partition_key string, constraint_id string, "
-                    "violation_count long, evaluated_count long, passed boolean",
-                ).select(*VERDICT_COLUMNS)
+                spark.createDataFrame(rows, VERDICT_SCHEMA).select(*VERDICT_COLUMNS)
             )
             continue
         else:

@@ -13,10 +13,11 @@ Plan shape (idiomatic, Catalyst-friendly):
   xsd2json.pl:58-66, 2267-2284) — and like the reference's merges it is
   associative-commutative, so partial aggregation is safe.
 
-- VIOLATION rows come from one additional scan that evaluates all
-  predicates at once into an array of failed constraint ids, then
-  explodes (rows with no failures are filtered before the explode, so
-  the output is proportional to the number of violations, not rows).
+- VIOLATION rows come from one additional scan that first keeps only
+  rows failing SOME predicate (one OR of the negated predicates), then
+  builds the array of failed constraint ids for those rows alone and
+  explodes it — the array/cast work is proportional to the number of
+  violations, not rows.
 
 - TABLE-LEVEL constraints each get their natural distributed plan:
   unique     -> two-stage (salted) count per key, HAVING n > 1
@@ -36,10 +37,12 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Dict, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from xsd2json_spark.engine.compile import compile_predicate
 from xsd2json_spark.spec.constraints import (
@@ -53,7 +56,10 @@ from xsd2json_spark.spec.constraints import (
 )
 
 VERDICT_COLUMNS = ["partition_key", "constraint_id", "violation_count", "evaluated_count", "passed"]
-VIOLATION_EXTRA = ["constraint_id", "detail"]
+VERDICT_SCHEMA = ("partition_key string, constraint_id string, violation_count long, "
+                  "evaluated_count long, passed boolean")
+STATS_SCHEMA = ("partition_key string, column string, count long, null_count long, null_rate double, "
+                "distinct long, min string, max string, quantiles array<double>")
 
 #: optimizer size estimate above which Quantile(approx=None) switches
 #: from the exact sort-based F.percentile to the mergeable GK sketch
@@ -62,6 +68,58 @@ VIOLATION_EXTRA = ["constraint_id", "detail"]
 QUANTILE_EXACT_MAX_BYTES = 256 * 1024 * 1024
 
 _log = logging.getLogger(__name__)
+
+#: first characters of a string Spark's string->double cast can accept
+#: (after it trims chars <= U+0020): sign, digit, '.', and the i / n of
+#: inf / infinity / nan in either case
+_NUMERIC_LEADS = tuple("0123456789+-.iInN")
+
+
+def _sketch_number(c: Column, is_string: bool) -> Column:
+    """``try_cast(c AS DOUBLE)`` for the sketch, minus the exception a
+    failing string cast throws and catches per value (nearly every row
+    of a text column): a string whose first char can start no number
+    is NULL without the cast; one starting with a char <= U+0020 (or
+    empty) still takes it, since the cast trims those first."""
+    if not is_string:
+        return c.try_cast("double")
+    lead = F.substring(c, 1, 1)
+    return F.when(lead.isin(*_NUMERIC_LEADS) | (lead <= F.lit(" ")), c.try_cast("double"))
+
+
+def _sketch_inputs(c: Column, is_string: bool):
+    """(value, null flag, 64-char prefix, number): the sketch's row
+    inputs for one watched expression. min/max run over the PREFIX,
+    not the full value: string min/max puts a var-length value in the
+    agg buffer, which (a) forces SortAggregate and (b) copy-churns on
+    long text — measured 20-40s vs 0.7s on 16M rows with KB-sized
+    strings. Lexicographic order is prefix-monotone, so
+    min(prefix(x)) == prefix(min(x)); the sketch loses nothing it
+    would have shipped to the driver anyway."""
+    return c, c.isNull(), F.substring(c.cast("string"), 1, 64), _sketch_number(c, is_string)
+
+
+def _passed(violations: Column, evaluated: Column, max_fail_ratio: Column) -> Column:
+    """The row-level verdict rule (Deequ compliance): tolerate up to
+    max_fail_ratio * evaluated rows failing; a NULL ratio (the default)
+    keeps the strict zero-violations rule."""
+    return F.when(
+        max_fail_ratio.isNotNull(),
+        violations.cast("double") <= max_fail_ratio * evaluated.cast("double"),
+    ).otherwise(violations == 0)
+
+
+def _violation_rows(src: DataFrame, keys, fails) -> DataFrame:
+    """(keys..., constraint_id, detail) rows from (fail condition,
+    constraint id) pairs. Filtering on the OR of the conditions first
+    builds the id array and casts the keys for failing rows only; a
+    NULL condition keeps no row and lists no id, as when(NULL, id)."""
+    failed = F.array_compact(F.array(*[F.when(f, F.lit(cid)) for f, cid in fails]))
+    return (
+        src.filter(reduce(Column.__or__, [f for f, _ in fails]))
+        .select(*[F.col(k).cast("string").alias(k) for k in keys], F.explode(failed).alias("constraint_id"))
+        .withColumn("detail", F.lit(None).cast("string"))
+    )
 
 
 def _resolve_quantile_approx(approx: Optional[bool], src: DataFrame) -> bool:
@@ -237,7 +295,7 @@ class ValidationEngine:
         return hit[1]
 
     def _row_counter_exprs(self):
-        """Memoized per engine: called by BOTH _agg_pass and
+        """Memoized per engine: called by BOTH row_verdicts_and_stats and
         _verdicts_stats_from_agg (the latter only for the ids); the
         Column aggregates are reusable unresolved trees (see _pred)."""
         cached = self._row_counter_cache
@@ -250,55 +308,60 @@ class ValidationEngine:
             cached = self._row_counter_cache = (exprs, ids)
         return list(cached[0]), list(cached[1])
 
-    def _sketch_exprs(self, force_approx: bool = False):
-        cached = self._sketch_cache.get(force_approx)
-        if cached is not None:
-            return list(cached)
+    def _watched(self, df: DataFrame):
+        """(Column, resolves to a binary-collated string on ``df``) per
+        watched expression; the flag picks the numeric cast form."""
+        cols = [F.expr(w) if not w.isidentifier() else F.col(w) for w in self.spec.watched_columns]
+        if not cols:
+            return []
+        return list(zip(cols, [f.dataType == StringType() for f in df.select(*cols).schema.fields]))
+
+    def _sketch_aggs(self, inputs, exact: bool):
+        """The stats sketch's aggregates over (distinct input, null flag,
+        prefix, number) Columns per watched expression. Aliases are keyed
+        by POSITIONAL INDEX, not the expression text: a watched
+        expression may contain dots/spaces/quotes that would make a
+        text-derived alias unparseable as a column reference."""
         cfg = self.config
         exprs = []
-        # aliases are keyed by POSITIONAL INDEX, not the expression text:
-        # a watched expression may contain dots/spaces/quotes that would
-        # make a text-derived alias unparseable as a column reference.
-        for i, col in enumerate(self.spec.watched_columns):
-            c = F.expr(col) if not col.isidentifier() else F.col(col)
-            exact = (cfg.exact or not cfg.approx_distinct) and not force_approx
-            distinct = F.count_distinct(c) if exact else F.approx_count_distinct(c)
-            numeric = c.try_cast("double")
-            # min/max over a 64-char PREFIX, not the full value: string
-            # min/max puts a var-length value in the agg buffer, which
-            # (a) forces SortAggregate and (b) copy-churns on long text —
-            # measured 20-40s vs 0.7s on 16M rows with KB-sized strings.
-            # Lexicographic order is prefix-monotone, so
-            # min(prefix(x)) == prefix(min(x)); the sketch loses nothing
-            # it would have shipped to the driver anyway.
-            prefix = F.substring(c.cast("string"), 1, 64)
+        for i, (value, null, prefix, number) in enumerate(inputs):
             exprs += [
                 F.count(F.lit(1)).alias(f"__st_{i}__count"),
-                F.sum(c.isNull().cast("long")).alias(f"__st_{i}__null_count"),
-                distinct.alias(f"__st_{i}__distinct"),
+                F.sum(null.cast("long")).alias(f"__st_{i}__null_count"),
+                (F.count_distinct(value) if exact else F.approx_count_distinct(value)).alias(
+                    f"__st_{i}__distinct"
+                ),
                 F.min(prefix).alias(f"__st_{i}__min"),
                 F.max(prefix).alias(f"__st_{i}__max"),
-                F.percentile_approx(numeric, list(cfg.quantiles), cfg.quantile_accuracy).alias(
+                F.percentile_approx(number, list(cfg.quantiles), cfg.quantile_accuracy).alias(
                     f"__st_{i}__quantiles"
                 ),
             ]
-        self._sketch_cache[force_approx] = exprs
-        return list(exprs)
+        return exprs
 
-    def _agg_pass(self, df: DataFrame) -> DataFrame:
-        """The single wide aggregation. Returns one row per partition_key
-        with all constraint counters and sketch fields. A global run
-        (no partition_by) uses a grand aggregate so even an EMPTY input
+    def _sketch_exprs(self, df: DataFrame, force_approx: bool = False):
+        cfg = self.config
+        exact = (cfg.exact or not cfg.approx_distinct) and not force_approx
+        watched = self._watched(df)
+        # the cast form follows the input's types, so the memo does too
+        key = (exact, tuple(s for _, s in watched))
+        if key not in self._sketch_cache:
+            self._sketch_cache[key] = self._sketch_aggs([_sketch_inputs(c, s) for c, s in watched], exact)
+        return list(self._sketch_cache[key])
+
+    def _agg_pass(self, src: DataFrame, exprs) -> DataFrame:
+        """The single wide aggregation of ``exprs`` (counters + sketch)
+        plus the row total: one row per partition_key. A global run (no
+        partition_by) uses a grand aggregate so even an EMPTY input
         yields one verdict row per constraint (vacuous pass)."""
-        counter_exprs, _ = self._row_counter_exprs()
-        exprs = counter_exprs + self._sketch_exprs() + [F.count(F.lit(1)).alias("__total")]
+        exprs = [*exprs, F.count(F.lit(1)).alias("__total")]
         if self.spec.partition_by:
-            return df.groupBy(_partition_key(self.spec).alias("partition_key")).agg(*exprs)
-        return df.groupBy().agg(*exprs).select(F.lit("ALL").alias("partition_key"), "*")
+            return src.groupBy(_partition_key(self.spec).alias("partition_key")).agg(*exprs)
+        return src.groupBy().agg(*exprs).select(F.lit("ALL").alias("partition_key"), "*")
 
     def row_verdicts_and_stats(self, df: DataFrame) -> "tuple[DataFrame, DataFrame]":
-        agg = self._agg_pass(df)
-        agg = agg.cache()  # tiny: one row per partition_key
+        counter_exprs, _ = self._row_counter_exprs()
+        agg = self._agg_pass(df, counter_exprs + self._sketch_exprs(df)).cache()  # tiny
         self._cached_agg = agg
         return self._verdicts_stats_from_agg(agg)
 
@@ -332,13 +395,7 @@ class ValidationEngine:
                 pairs,
             )
             vc = F.coalesce("violation_count", F.lit(0))
-            # max_fail_ratio verdict policy (Deequ compliance): tolerate
-            # up to mfr * evaluated rows failing; default (NULL mfr)
-            # keeps the strict zero-violations rule.
-            passed = F.when(
-                F.col("__mfr").isNotNull(),
-                vc.cast("double") <= F.col("__mfr") * F.col("evaluated_count").cast("double"),
-            ).otherwise(vc == 0)
+            passed = _passed(vc, F.col("evaluated_count"), F.col("__mfr"))
             verdicts = stacked.select(
                 "partition_key",
                 "constraint_id",
@@ -347,7 +404,7 @@ class ValidationEngine:
                 passed.alias("passed"),
             )
         else:
-            verdicts = self.spark.createDataFrame([], schema="partition_key string, constraint_id string, violation_count long, evaluated_count long, passed boolean")
+            verdicts = self.spark.createDataFrame([], VERDICT_SCHEMA)
 
         stats_rows = []
         for i, col in enumerate(self.spec.watched_columns):
@@ -370,11 +427,7 @@ class ValidationEngine:
             for s in stats_rows[1:]:
                 stats = stats.unionByName(s)
         else:
-            stats = self.spark.createDataFrame(
-                [],
-                schema="partition_key string, column string, count long, null_count long, "
-                "null_rate double, distinct long, min string, max string, quantiles array<double>",
-            )
+            stats = self.spark.createDataFrame([], STATS_SCHEMA)
         return verdicts, stats
 
     # ------------------------------------------------------------------
@@ -386,16 +439,7 @@ class ValidationEngine:
         row_cs = self.spec.row_level()
         if not row_cs:
             return self._empty_violations(keys)
-        failed = F.array_compact(
-            F.array(*[F.when(~self._pred(c), F.lit(c.id)) for c in row_cs])
-        )
-        key_cols = [F.col(k).cast("string").alias(k) for k in keys]
-        return (
-            df.select(*key_cols, failed.alias("__failed"))
-            .filter(F.size("__failed") > 0)
-            .select(*keys, F.explode("__failed").alias("constraint_id"))
-            .withColumn("detail", F.lit(None).cast("string"))
-        )
+        return _violation_rows(df, keys, [(~self._pred(c), c.id) for c in row_cs])
 
     def _empty_violations(self, keys) -> DataFrame:
         fields = ", ".join([f"`{k}` string" for k in keys] + ["constraint_id string", "detail string"])
@@ -628,29 +672,20 @@ class ValidationEngine:
             [getattr(self, "_cached_agg", None)],
         )
 
-    def _finish(
-        self,
-        verdicts: DataFrame,
-        stats: DataFrame,
-        row_viol: DataFrame,
-        keyed_src: DataFrame,
-        raw_df: DataFrame,
-        keys,
-        cached,
-    ) -> ValidationResult:
-        """Shared table-level pass + result assembly. ``keyed_src`` is
-        the frame the key-only checks (unique / FK / cardinality) read —
-        the raw fact table in two-pass mode, the narrow cache in fused
-        mode (identical results: those checks only touch columns the
-        narrow projection passes through verbatim). Quantile and drift
-        read ``raw_df`` always: they need the actual value distribution
-        of arbitrary expressions, and their scans are column-pruned so
-        they never touch the wide content column unless the constraint
-        itself watches it."""
-        all_viol = [row_viol]
-        table_ids = []
-        drift_rows = []
+    def _table_checks(self, keyed_src: DataFrame, raw_df: DataFrame, keys):
+        """Every table-level constraint's plan: (violation frames
+        conformed to ``keys``, their constraint ids, drift verdict rows).
+        ``keyed_src`` is the frame the key-only checks (unique / FK /
+        cardinality) read — the raw fact table in two-pass mode, the
+        narrow cache in fused mode (identical results: those checks only
+        touch columns the narrow projection passes through verbatim).
+        Quantile, FD and drift read ``raw_df`` always: they need the
+        actual values of arbitrary columns/expressions, and their scans
+        are column-pruned so they never touch the wide content column
+        unless the constraint itself names it."""
+        from xsd2json_spark.engine.drift import drift_verdict
 
+        viols, ids, drift_rows = [], [], []
         for c in self.spec.table_level():
             if isinstance(c, Unique):
                 v = self.unique_violations(keyed_src, c)
@@ -661,25 +696,30 @@ class ValidationEngine:
             elif isinstance(c, Quantile):
                 v = self.quantile_violations(raw_df, c)
             elif isinstance(c, FunctionalDependency):
-                # raw_df, not keyed_src: determinant/dependent columns
-                # are arbitrary (the fused narrow cache only carries
-                # keys + flags); the FD scan column-prunes to exactly
-                # the columns it names.
                 v = self.fd_violations(raw_df, c)
             elif isinstance(c, Drift):
-                from xsd2json_spark.engine.drift import drift_verdict
-
                 dv = drift_verdict(self.spark, raw_df, c, self.baselines)
                 drift_rows.extend(dv if isinstance(dv, list) else [dv])
                 continue
             else:  # pragma: no cover
                 continue
-            table_ids.append(c.id)
-            all_viol.append(self._conform_violations(v, keys))
+            ids.append(c.id)
+            viols.append(self._conform_violations(v, keys))
+        return viols, ids, drift_rows
 
-        violations = all_viol[0]
-        for v in all_viol[1:]:
-            violations = violations.unionByName(v)
+    def _finish(
+        self,
+        verdicts: DataFrame,
+        stats: DataFrame,
+        row_viol: DataFrame,
+        keyed_src: DataFrame,
+        raw_df: DataFrame,
+        keys,
+        cached,
+    ) -> ValidationResult:
+        """Shared table-level pass + result assembly."""
+        table_viol, table_ids, drift_rows = self._table_checks(keyed_src, raw_df, keys)
+        violations = reduce(DataFrame.unionByName, table_viol, row_viol)
         if table_ids:
             violations = violations.persist()  # computed once, reused by verdicts + consumers
             cached.append(violations)
@@ -701,12 +741,7 @@ class ValidationEngine:
             )
             verdicts = verdicts.unionByName(tv)
         if drift_rows:
-            dv = self.spark.createDataFrame(
-                drift_rows,
-                schema="partition_key string, constraint_id string, violation_count long, "
-                "evaluated_count long, passed boolean",
-            )
-            verdicts = verdicts.unionByName(dv)
+            verdicts = verdicts.unionByName(self.spark.createDataFrame(drift_rows, VERDICT_SCHEMA))
 
         return ValidationResult(
             verdicts=verdicts,
@@ -757,81 +792,42 @@ class ValidationEngine:
         row_cs = self.spec.row_level()
         keys = list(self.spec.key_columns) or df.columns[:1]
 
-        passthrough: list = []
-        seen = set()
-
-        def _add(name: str):
-            if name not in seen:
-                seen.add(name)
-                passthrough.append(name)
-
-        for k in keys:
-            _add(k)
-        for p in self.spec.partition_by:
-            _add(p)
+        passthrough = [*keys, *self.spec.partition_by]
         for c in self.spec.table_level():
-            if isinstance(c, Unique) or isinstance(c, ForeignKey):
-                for x in c.columns:
-                    _add(x)
+            if isinstance(c, (Unique, ForeignKey)):
+                passthrough += c.columns
             elif isinstance(c, Cardinality):
-                for x in c.group_by:
-                    _add(x)
+                passthrough += c.group_by
 
-        cols = [F.col(n) for n in passthrough]
+        cols = [F.col(n) for n in dict.fromkeys(passthrough)]  # deduplicated, in order
         for i, c in enumerate(row_cs):
             cols.append((~self._pred(c)).alias(f"__fail_{i}"))
-        for i, w in enumerate(self.spec.watched_columns):
-            wc = F.expr(w) if not w.isidentifier() else F.col(w)
+        sketch = []
+        for i, (wc, is_string) in enumerate(self._watched(df)):
+            _, null, prefix, number = _sketch_inputs(wc, is_string)
             cols += [
-                wc.isNull().alias(f"__w_{i}_null"),
-                # prefix-monotone: min/max over the 64-char prefix equals
-                # the prefix of min/max (same dodge as _sketch_exprs)
-                F.substring(wc.cast("string"), 1, 64).alias(f"__w_{i}_prefix"),
+                null.alias(f"__w_{i}_null"),
+                prefix.alias(f"__w_{i}_prefix"),
                 # null-guarded: xxhash64(NULL) is a seed constant, not
                 # NULL — unguarded it would count nulls as a distinct
                 F.when(wc.isNotNull(), F.xxhash64(wc)).alias(f"__w_{i}_hash"),
-                wc.try_cast("double").alias(f"__w_{i}_num"),
+                number.alias(f"__w_{i}_num"),
             ]
+            sketch.append([F.col(f"__w_{i}_{x}") for x in ("hash", "null", "prefix", "num")])
         narrow = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
 
-        cfg = self.config
         exprs = [
             F.sum(F.col(f"__fail_{i}").cast("long")).alias(f"__viol_{i}")
             for i in range(len(row_cs))
         ]
-        for i, w in enumerate(self.spec.watched_columns):
-            exprs += [
-                F.count(F.lit(1)).alias(f"__st_{i}__count"),
-                F.sum(F.col(f"__w_{i}_null").cast("long")).alias(f"__st_{i}__null_count"),
-                F.approx_count_distinct(f"__w_{i}_hash").alias(f"__st_{i}__distinct"),
-                F.min(f"__w_{i}_prefix").alias(f"__st_{i}__min"),
-                F.max(f"__w_{i}_prefix").alias(f"__st_{i}__max"),
-                F.percentile_approx(
-                    F.col(f"__w_{i}_num"), list(cfg.quantiles), cfg.quantile_accuracy
-                ).alias(f"__st_{i}__quantiles"),
-            ]
-        exprs.append(F.count(F.lit(1)).alias("__total"))
-        if self.spec.partition_by:
-            agg = narrow.groupBy(_partition_key(self.spec).alias("partition_key")).agg(*exprs)
-        else:
-            agg = narrow.groupBy().agg(*exprs).select(F.lit("ALL").alias("partition_key"), "*")
-        agg = agg.cache()  # tiny: one row per partition_key
+        agg = self._agg_pass(narrow, exprs + self._sketch_aggs(sketch, exact=False)).cache()  # tiny
         self._cached_agg = agg
         verdicts, stats = self._verdicts_stats_from_agg(agg)
 
-        if row_cs:
-            failed = F.array_compact(
-                F.array(*[F.when(F.col(f"__fail_{i}"), F.lit(c.id)) for i, c in enumerate(row_cs)])
-            )
-            row_viol = (
-                narrow.select(*[F.col(k).cast("string").alias(k) for k in keys], failed.alias("__failed"))
-                .filter(F.size("__failed") > 0)
-                .select(*keys, F.explode("__failed").alias("constraint_id"))
-                .withColumn("detail", F.lit(None).cast("string"))
-            )
-        else:  # pragma: no cover — _resolve_fused requires row-level
-            row_viol = self._empty_violations(keys)
-
+        # _resolve_fused guarantees at least one row-level constraint
+        row_viol = _violation_rows(
+            narrow, keys, [(F.col(f"__fail_{i}"), c.id) for i, c in enumerate(row_cs)]
+        )
         return self._finish(verdicts, stats, row_viol, narrow, df, keys, [agg, narrow])
 
     def _run_single_pass(self, df: DataFrame) -> ValidationResult:
@@ -846,40 +842,13 @@ class ValidationEngine:
         from pyspark.sql import Observation
 
         counter_exprs, ids = self._row_counter_exprs()
-        sketch_exprs = self._sketch_exprs(force_approx=True)  # observe rejects DISTINCT aggs
+        sketch_exprs = self._sketch_exprs(df, force_approx=True)  # observe rejects DISTINCT aggs
         obs = Observation()
         observed = df.observe(obs, *counter_exprs, *sketch_exprs, F.count(F.lit(1)).alias("__total"))
 
         keys = list(self.spec.key_columns) or df.columns[:1]
-        all_viol = [self.row_violations(observed)]
-        table_ids = []
-        drift_rows = []
-        for c in self.spec.table_level():
-            if isinstance(c, Unique):
-                v = self.unique_violations(df, c)
-            elif isinstance(c, ForeignKey):
-                v = self.fk_violations(df, c)
-            elif isinstance(c, Cardinality):
-                v = self.cardinality_violations(df, c)
-            elif isinstance(c, Quantile):
-                v = self.quantile_violations(df, c)
-            elif isinstance(c, FunctionalDependency):
-                v = self.fd_violations(df, c)
-            elif isinstance(c, Drift):
-                from xsd2json_spark.engine.drift import drift_verdict
-
-                dv = drift_verdict(self.spark, df, c, self.baselines)
-                drift_rows.extend(dv if isinstance(dv, list) else [dv])
-                continue
-            else:  # pragma: no cover
-                continue
-            table_ids.append(c.id)
-            all_viol.append(self._conform_violations(v, keys))
-
-        violations = all_viol[0]
-        for v in all_viol[1:]:
-            violations = violations.unionByName(v)
-        violations = violations.persist()
+        table_viol, table_ids, drift_rows = self._table_checks(df, df, keys)
+        violations = reduce(DataFrame.unionByName, table_viol, self.row_violations(observed)).persist()
         # THE action: materializes violation rows into the cache and
         # fires the observed metrics. It must be a GLOBAL aggregate —
         # a grouped aggregate's partial stage emits ZERO rows on a
@@ -908,11 +877,7 @@ class ValidationEngine:
             n = counts.get(cid, 0)
             vrows.append(("ALL", cid, int(n), None, n == 0))
         vrows.extend(drift_rows)
-        verdicts = self.spark.createDataFrame(
-            vrows,
-            schema="partition_key string, constraint_id string, violation_count long, "
-            "evaluated_count long, passed boolean",
-        )
+        verdicts = self.spark.createDataFrame(vrows, VERDICT_SCHEMA)
 
         srows = []
         for i, col in enumerate(self.spec.watched_columns):
@@ -926,11 +891,7 @@ class ValidationEngine:
                  metrics.get(f"__st_{i}__min"), metrics.get(f"__st_{i}__max"),
                  [float(x) for x in q] if q is not None else None)
             )
-        stats = self.spark.createDataFrame(
-            srows,
-            schema="partition_key string, column string, count long, null_count long, "
-            "null_rate double, distinct long, min string, max string, quantiles array<double>",
-        )
+        stats = self.spark.createDataFrame(srows, STATS_SCHEMA)
         return ValidationResult(
             verdicts=verdicts, violations=violations, stats=stats,
             _cached=tuple([violations, *self._extra_cached]),

@@ -40,8 +40,9 @@ def get_spark(
         # inferred filters re-evaluate it per row, and the lambda body
         # re-evaluates the captured expression PER ELEMENT: measured
         # 45x slowdown on dedup shingling (14.8s -> 0.3s for 150 docs).
-        # Our explode sources pre-filter explicitly on the projected
-        # attribute where emptiness matters (engine.row_violations).
+        # Our explode sources pre-filter explicitly where emptiness
+        # matters (engine.validate._violation_rows keeps only failing
+        # rows before its explode).
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",

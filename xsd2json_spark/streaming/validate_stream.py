@@ -115,10 +115,11 @@ def stream_bin_counts(
     value = (F.expr(c.expr) if c.expr else F.col(c.column)).cast("double")
     return (
         stream_df.withWatermark(time_col, watermark)
-        .filter(value.isNotNull())
+        .withColumn("__v", value)
+        .filter(F.col("__v").isNotNull())
         .groupBy(
             F.window(F.col(time_col), window).alias("window"),
-            bin_index_expr(value, baseline["grid"]).alias("__bin"),
+            bin_index_expr("__v", baseline["grid"]).alias("__bin"),
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
